@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import StateStore._
 
@@ -456,6 +456,21 @@ final class Flow(
   private case class DeltaScope(pred: org.apache.spark.sql.Column,
       memoTotal: Long)
 
+  /** A pass's scope once level 2 has resolved every suspect, in one of
+    * two forms: driver lists and LOCAL relations (a scope within
+    * [[Flow.MaxScopeLiterals]]) or executor-side frames (past it).
+    *
+    * @param changedOnly restricts an item-keyed frame to the changed
+    *                    (recomputing) items
+    * @param scopeKeys   changed ∪ gone item keys
+    * @param scopeList   the same keys as a driver list (literal form)
+    * @param memoUpserts the memo rows to commit: refreshed + recomputed
+    * @param cached      frames this form cached, unpersisted at exit */
+  private case class PassScope(nRefreshed: Long, nChanged: Long,
+      changedOnly: DataFrame => DataFrame, goneKeys: DataFrame,
+      scopeKeys: DataFrame, scopeList: Option[Seq[String]],
+      memoUpserts: DataFrame, cached: Seq[DataFrame])
+
   private def runImpl(spark: SparkSession, fullReprocess: Boolean,
       listingOverride: Option[DataFrame],
       deltaScope: Option[DeltaScope] = None): RunStats = {
@@ -566,35 +581,35 @@ final class Flow(
         0, 0, 0, 0, 0, 0, 0)
     }
 
-    // Bounded-scope literalization (r18 batch 3): on a suspect-free
-    // pass whose changed+gone scope fits the literal cap, ONE collect
-    // over the checkpointed probe turns the scope into driver lists.
-    // Downstream keyed restrictions then ride plan literals or LOCAL
-    // key relations — a LocalRelation's broadcast build is driver-side
-    // — where the frame-based path pays one whole Spark job per
-    // small-side broadcast build, several times per engine pass.
-    // Suspect-bearing passes keep the frame path: their changed set is
-    // only known after level 2.
-    val scopeLists: Option[(Seq[String], Seq[String])] =
-      if (byCls("suspect") != 0 ||
-          byCls("changed") + byCls("gone") > Flow.MaxScopeLiterals) None
-      else {
-        val rows = probe.filter(col("cls") =!= "unchanged")
-          .select("item_key", "cls").collect()
-        def keysOf(cls: String) = rows.collect {
-          case r if r.getString(1) == cls => r.getString(0) }.toSeq
-        Some((keysOf("changed"), keysOf("gone")))
-      }
+    // Bounded-scope literalization: when the pass's changed + suspect
+    // + gone scope fits the literal cap, ONE collect over the
+    // checkpointed probe brings the scope rows — with the stored memo
+    // columns level 2 and the memo commit need — to the driver. Every
+    // keyed restriction downstream (content load, transform input,
+    // tracking read, state commit) then rides plan literals or LOCAL
+    // relations: a LocalRelation's broadcast build is driver-side,
+    // where a frame pays one whole Spark job per small-side broadcast
+    // build, several times per engine pass. The rule is decided once,
+    // here, from the pre-level-2 scope; past the cap the scope stays a
+    // frame end to end. The rows split into (gone, to load).
+    val scopeRows: Option[(Array[Row], Array[Row])] =
+      if (byCls("changed") + byCls("suspect") + byCls("gone") >
+          Flow.MaxScopeLiterals) None
+      else Some(probe.filter(col("cls") =!= "unchanged")
+        .select("item_key", "cls", "memo_state", "processor_fp",
+          "content_fp")
+        .collect().partition(_.getString(1) == "gone"))
 
     // ---- level 2: content fingerprint for suspects --------------------
     // (suspects exist only for sources with a content fp; content is
-    // loaded once and reused by the transform; the key set stays a
-    // DataFrame end-to-end — Source.load decides how to exploit it)
-    val loadKeysDf = scopeLists match {
+    // loaded once and reused by the transform)
+    val loadKeysDf = scopeRows match {
       // a LOCAL key relation: the source's bounded-pushdown probe
-      // evaluates driver-side (no job); suspects are absent on this
-      // path, so the changed keys ARE the whole load set
-      case Some((changedL, _)) => Source.keysDf(spark, changedL)
+      // evaluates driver-side (no job)
+      case Some((_, toLoad)) =>
+        Source.keysDf(spark, toLoad.map(_.getString(0)).toSeq)
+      // the key set stays a DataFrame end-to-end — Source.load decides
+      // how to exploit it
       case None => probe
         .filter(col("cls").isin("changed", "suspect")).select("item_key")
     }
@@ -624,34 +639,99 @@ final class Flow(
               coalesce(col("__content_fp"), lit("<null>")))))))
           .as("__content_fp"))
 
-    val level2 =
-      if (byCls("suspect") == 0L)
-        spark.emptyDataFrame.withColumn("item_key", lit(""))
-          .withColumn("cls2", lit("")).limit(0).select("item_key", "cls2")
-      else probe.filter(col("cls") === "suspect")
-        .join(loadedFps.select(col("item_key"),
-          col("__content_fp").as("new_content_fp")), Seq("item_key"), "left")
-        .withColumn("cls2",
-          when(col("new_content_fp").isNotNull &&
-            col("new_content_fp") === col("content_fp"), lit("refreshed"))
-            .otherwise(lit("changed")))
-        .select(col("item_key"), col("cls2"))
-        .cache()
-    val nRefreshed =
-      if (byCls("suspect") == 0L) 0L
-      else level2.filter(col("cls2") === "refreshed").count()
-
-    val changedKeys = probe.filter(col("cls") === "changed").select("item_key")
-      .union(level2.filter(col("cls2") === "changed").select("item_key"))
-      .cache()
-    val nChanged = byCls("changed") + (byCls("suspect") - nRefreshed)
-    // gone keys as a LOCAL relation when the scope is literalized:
-    // every join against them (errors/user_state pruning, the memo
-    // tombstones) then broadcasts without a build job
-    val goneKeys = scopeLists match {
-      case Some((_, goneL)) => Source.keysDf(spark, goneL)
-      case None => probe.filter(col("cls") === "gone").select("item_key")
+    // A suspect is refreshed iff its new fingerprint is non-null and
+    // equals the stored one; otherwise — content differs, or the item
+    // vanished between the re-stat and the load — it is changed.
+    val scope = scopeRows match {
+      case Some((gone, toLoad)) =>
+        // level 2 on the driver: ONE collect of the loaded items'
+        // fingerprints (bounded by the literal cap) decides every
+        // suspect and supplies the recomputed memo rows' content fps
+        val fps: Map[String, String] =
+          if (source.contentFpOf.isEmpty || toLoad.isEmpty) Map.empty
+          else loadedFps.collect()
+            .map(r => r.getString(0) -> r.getString(1)).toMap
+        val (refreshed, changed) = toLoad
+          .partition(r => r.getString(1) == "suspect" &&
+            Option(fps.getOrElse(r.getString(0), null))
+              .contains(r.getString(4)))
+        val changedL = changed.map(_.getString(0)).toSeq
+        val goneL = gone.map(_.getString(0)).toSeq
+        val scopeL = changedL ++ goneL
+        // memo upserts straight from the collected rows: a refreshed
+        // row keeps its stored fps under the new memo state, a
+        // recomputed one takes this pass's
+        val memoRows = refreshed.map(r => Row(r.getString(0),
+            r.getString(3), r.getString(2), r.getString(4))) ++
+          changed.map(r => Row(r.getString(0), pFp, r.getString(2),
+            fps.getOrElse(r.getString(0), null)))
+        PassScope(refreshed.length.toLong, changedL.size.toLong,
+          changedOnly = _.filter(col("item_key").isin(changedL: _*)),
+          goneKeys = Source.keysDf(spark, goneL),
+          scopeKeys = Source.keysDf(spark, scopeL),
+          scopeList = Some(scopeL),
+          memoUpserts = spark.createDataFrame(
+            java.util.Arrays.asList(memoRows: _*), ComponentMemoSchema),
+          cached = Nil)
+      case None =>
+        val level2 =
+          if (byCls("suspect") == 0L) None
+          else Some(probe.filter(col("cls") === "suspect")
+            .join(loadedFps.select(col("item_key"),
+              col("__content_fp").as("new_content_fp")), Seq("item_key"),
+              "left")
+            .withColumn("cls2",
+              when(col("new_content_fp").isNotNull &&
+                col("new_content_fp") === col("content_fp"),
+                lit("refreshed"))
+                .otherwise(lit("changed")))
+            .select(col("item_key"), col("cls2"))
+            .cache())
+        val nRefreshed =
+          level2.fold(0L)(_.filter(col("cls2") === "refreshed").count())
+        val changedKeys = level2.foldLeft(
+            probe.filter(col("cls") === "changed").select("item_key"))(
+            (ks, l2) => ks.union(
+              l2.filter(col("cls2") === "changed").select("item_key")))
+          .cache()
+        val goneKeys = probe.filter(col("cls") === "gone").select("item_key")
+        // an empty refresh set commits an empty LOCAL frame instead of
+        // a two-join plan that provably yields zero rows
+        val refreshedMemo =
+          if (nRefreshed == 0)
+            spark.createDataFrame(
+              new java.util.ArrayList[Row](), ComponentMemoSchema)
+          else memo.drop("memo_state")
+            .join(level2.get.filter(col("cls2") === "refreshed")
+              .select("item_key"), Seq("item_key"), "left_semi")
+            .join(listing.select(col("item_key"), col("memo_state")),
+              Seq("item_key"))
+            .select("item_key", "processor_fp", "memo_state", "content_fp")
+        val recomputedBase = listing.select(col("item_key"), col("memo_state"))
+          .join(changedKeys, Seq("item_key"), "left_semi")
+        // a source WITHOUT a content fingerprint stores null content_fp
+        // for every row — the loadedFps join would broadcast-build and
+        // join only to attach that constant
+        val recomputedMemo =
+          if (source.contentFpOf.isEmpty)
+            recomputedBase.select(col("item_key"),
+              lit(pFp).as("processor_fp"), col("memo_state"),
+              lit(null).cast("string").as("content_fp"))
+          else recomputedBase
+            .join(loadedFps, Seq("item_key"), "left")
+            .select(col("item_key"), lit(pFp).as("processor_fp"),
+              col("memo_state"), col("__content_fp").as("content_fp"))
+        PassScope(nRefreshed,
+          byCls("changed") + byCls("suspect") - nRefreshed,
+          changedOnly = _.join(changedKeys, Seq("item_key"), "left_semi"),
+          goneKeys = goneKeys,
+          scopeKeys = changedKeys.union(goneKeys),
+          scopeList = None,
+          memoUpserts = refreshedMemo.unionByName(recomputedMemo),
+          cached = level2.toSeq :+ changedKeys)
     }
+    val nChanged = scope.nChanged
+    val nRefreshed = scope.nRefreshed
 
     // pure no-op run: nothing changed, appeared, vanished or needs a
     // memo refresh — skip the transform, reconcile AND the snapshot
@@ -667,7 +747,7 @@ final class Flow(
         st.commit(targetStateTable(spark, planned).toMap)
         afterCommit.foreach(_.apply())
       }
-      Seq(listing, probe, level2, changedKeys, loaded).foreach(_.unpersist())
+      (Seq(listing, probe, loaded) ++ scope.cached).foreach(_.unpersist())
       return RunStats(nTotal, byCls("unchanged") + survivors,
         0, 0, 0, 0, 0, 0, 0)
     }
@@ -677,22 +757,13 @@ final class Flow(
     // the stages are skipped entirely: desired-in-scope is empty by
     // definition, and a stage that cannot run on empty input — a
     // class declaredSchema explicitly tolerates — must not crash the
-    // GC/refresh path.
-    // literalized scope: the load set was exactly the changed keys, so
-    // a scan-level IN filter (defensive — the load contract already
-    // bounds it) replaces the semi-join and its broadcast build
-    val input = scopeLists match {
-      case Some((changedL, _)) =>
-        loaded.filter(col("item_key").isin(changedL: _*))
-          .drop("__content_fp")
-      case None =>
-        loaded.join(changedKeys, Seq("item_key"), "left_semi")
-          .drop("__content_fp")
-    }
+    // GC/refresh path. The load also holds the refreshed suspects'
+    // payloads: the changed-only restriction drops them.
+    val input = scope.changedOnly(loaded).drop("__content_fp")
     val desiredAll =
       if (nChanged == 0)
         spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          spark.sparkContext.emptyRDD[Row],
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("item_key",
               org.apache.spark.sql.types.StringType),
@@ -726,9 +797,7 @@ final class Flow(
       if (valueCols.isEmpty) md5(lit("{}"))
       else md5(to_json(struct(valueCols.map(col).toSeq: _*),
         FnMemo.JsonOptions))
-    val desired = desiredRaw
-      .withColumn("value_fp", valueFp)
-      .cache()
+    val desired = desiredRaw.withColumn("value_fp", valueFp)
 
     // ---- reconcile: classify against the tracking baseline ------------
     // (reference pre_commit reconcile, execution.rs:757; row handler
@@ -740,77 +809,49 @@ final class Flow(
     // one the container may have dropped column data the fingerprints
     // can't see — matching rows re-upsert defensively
     // (prev_may_be_missing semantics, statediff.py:160-166).
-    val scopeKeys = scopeLists match {
-      case Some((changedL, goneL)) =>
-        Source.keysDf(spark, (changedL ++ goneL).distinct)
-      case None => changedKeys.union(goneKeys)
-    }
     // bootstrap shortcut (r18), the tracking twin of the memo probe's:
     // with no committed tracking rows (or a destructive transition —
     // the baseline is void either way) the reconcile's full-outer join
     // would shuffle the whole desired set against an empty side to
-    // conclude "every row inserts". Skip the scope collect, the
-    // tracking read and the join outright — zero exchanges on the
-    // bootstrap reconcile.
+    // conclude "every row inserts". Skip the tracking read and the
+    // join outright — zero exchanges on the bootstrap reconcile.
     val trackingEmpty = planned.destructive ||
       !st.tableExists("tracking") || st.rowCount("tracking").contains(0L)
-    // scope as a bounded driver list when small (the overwhelmingly
-    // common delta run): enables the pruned below-merge tracking
-    // read. Collected ONLY under the declaration that uses it — an
-    // undeclared flow would pay the collect job for nothing. The cap
-    // is tighter than KeyedFetch's: these literals become a per-RUN
-    // IN plan over the tracking scan, and past a few thousand the
-    // optimizer pass costs more than the pruning saves — a scope that
-    // large is also no longer "small against the table", where the
-    // legacy semi-join is proportionally fine.
-    val scopeList: Option[Seq[String]] =
-      if (trackingEmpty || !rowKeyOwnedByItem ||
-          nChanged + byCls("gone") > Flow.MaxScopeLiterals) None
-      else scopeLists match {
-        // already collected once for the literalized scope — reuse
-        case Some((changedL, goneL)) => Some((changedL ++ goneL).distinct)
-        case None => Some(scopeKeys.select(col("item_key").cast("string"))
-          .distinct().collect().map(_.getString(0)).toSeq)
-      }
-    lazy val trackedInScope0 = scopeList match {
+    lazy val trackedInScope = scope.scopeList match {
       case Some(ks) if rowKeyOwnedByItem =>
         // each row_key's item is immutable by declaration, so an item
         // filter below the latest-wins window keeps exactly the scope
         // groups' full histories — O(scope) read against the clustered
         // base instead of materializing + shuffling the whole table
         if (ks.isEmpty)
-          spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
               TrackingSchema)
-            .select(col("row_key"), col("value_fp").as("prev_fp"),
-              col("item_key").as("prev_item"))
+            .select(col("row_key"), col("value_fp").as("__prev_fp"))
         else st.readWhere("tracking", TrackingSchema,
             col("item_key").isin(ks: _*))
-          .select(col("row_key"), col("value_fp").as("prev_fp"),
-            col("item_key").as("prev_item"))
+          .select(col("row_key"), col("value_fp").as("__prev_fp"))
       case _ =>
         st.read("tracking", TrackingSchema)
-          .join(scopeKeys, Seq("item_key"), "left_semi")
-          .select(col("row_key"), col("value_fp").as("prev_fp"),
-            col("item_key").as("prev_item"))
+          .join(scope.scopeKeys, Seq("item_key"), "left_semi")
+          .select(col("row_key"), col("value_fp").as("__prev_fp"))
     }
+    // ONE cache for the whole reconcile: `actions` carries the desired
+    // rows' value columns, so the target upserts and the tracking
+    // upserts below are narrow filters of it — neither needs a join
+    // (whose broadcast build would be a job) or a cache of its own.
     val actions = (
       if (trackingEmpty)
         // no baseline ⇒ every desired row inserts, nothing deletes —
         // identical to the full_outer against an empty side, minus
         // its two sort-merge exchanges over the desired set
-        desired.select(col("item_key"), col("row_key"), col("value_fp"))
-          .withColumn("prev_fp", lit(null).cast("string"))
-          .withColumn("prev_item", lit(null).cast("string"))
-          .withColumn("action", lit("insert"))
+        desired.withColumn("__action", lit("insert"))
       else desired
-        .select(col("item_key"), col("row_key"), col("value_fp"))
-        .join(trackedInScope0, Seq("row_key"), "full_outer")
-        .withColumn("action",
+        .join(trackedInScope, Seq("row_key"), "full_outer")
+        .withColumn("__action",
           when(col("value_fp").isNull, lit("delete"))     // tracked, not redeclared
-            .when(col("prev_fp").isNull, lit("insert"))
+            .when(col("__prev_fp").isNull, lit("insert"))
             .when(lit(planned.lossy) ||
-              col("prev_fp") =!= col("value_fp"), lit("update"))
+              col("__prev_fp") =!= col("value_fp"), lit("update"))
             .otherwise(lit("noop")))
       ).cache()
     // the ≤4-row action histogram is collected BEFORE the apply ON
@@ -824,7 +865,7 @@ final class Flow(
     // with no shuffle files to reuse every partial scan re-executed
     // the expensive transform. One full pass here pins the whole
     // cache; every apply/commit scan after it is a memory read.
-    val byAction = actions.groupBy("action").count().collect()
+    val byAction = actions.groupBy("__action").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
 
     // ---- apply the delta to the target (idempotent; BEFORE the state
@@ -835,11 +876,11 @@ final class Flow(
     // record keeps the old generation, so the rerun re-plans the same
     // destructive transition and re-truncates idempotently.
     if (planned.destructive) target.truncate(spark)
-    val upsertKeys = actions
-      .filter(col("action").isin("insert", "update")).select("row_key")
-    val upserts = desired.drop("value_fp")
-      .join(upsertKeys, Seq("row_key"), "left_semi")
-    val deleteKeys = actions.filter(col("action") === "delete").select("row_key")
+    val upserts = actions.filter(col("__action").isin("insert", "update"))
+      .select(("row_key" +: desiredRaw.columns.filterNot(_ == "row_key"))
+        .map(col).toSeq: _*)
+    val deleteKeys =
+      actions.filter(col("__action") === "delete").select("row_key")
     target.apply(spark, upserts, deleteKeys)
     // attachment transition after the row apply (the container exists
     // by now); a throwing statement aborts before the state commit,
@@ -856,39 +897,7 @@ final class Flow(
     // (StateStore.commitTables). Unchanged components never appear in
     // any segment: their memo/tracking/state rows stay physically in
     // place in the base.
-    // an empty refresh set commits an empty LOCAL frame instead of a
-    // two-join plan that provably yields zero rows — those joins'
-    // broadcast builds were whole Spark jobs inside every commit write
-    val refreshedMemo =
-      if (nRefreshed == 0)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          ComponentMemoSchema)
-      else memo.drop("memo_state")
-      .join(level2.filter(col("cls2") === "refreshed").select("item_key"),
-        Seq("item_key"), "left_semi")
-      .join(listing.select(col("item_key"), col("memo_state")), Seq("item_key"))
-      .select("item_key", "processor_fp", "memo_state", "content_fp")
-    val recomputedBase = (scopeLists match {
-      case Some((changedL, _)) =>
-        listing.select(col("item_key"), col("memo_state"))
-          .filter(col("item_key").isin(changedL: _*))
-      case None =>
-        listing.select(col("item_key"), col("memo_state"))
-          .join(changedKeys, Seq("item_key"), "left_semi")
-    })
-    // a source WITHOUT a content fingerprint stores null content_fp
-    // for every row — the loadedFps join would broadcast-build and
-    // join only to attach that constant
-    val recomputedMemo =
-      if (source.contentFpOf.isEmpty)
-        recomputedBase.select(col("item_key"), lit(pFp).as("processor_fp"),
-          col("memo_state"), lit(null).cast("string").as("content_fp"))
-      else recomputedBase
-        .join(loadedFps, Seq("item_key"), "left")
-        .select(col("item_key"), lit(pFp).as("processor_fp"),
-          col("memo_state"), col("__content_fp").as("content_fp"))
-    val memoCommit = StateStore.Delta(
-      refreshedMemo.unionByName(recomputedMemo), goneKeys)
+    val memoCommit = StateStore.Delta(scope.memoUpserts, scope.goneKeys)
 
     // tracking: every desired row upserts — latest-wins on row_key IS
     // the ownership preemption (reference execution.rs:771-833): a
@@ -896,7 +905,8 @@ final class Flow(
     // another component. Delete-action rows tombstone. Destructive:
     // the container was recreated — no pre-existing row survived, so
     // tracking is rewritten as exactly the desired set.
-    val desiredTracking = desired.select("item_key", "row_key", "value_fp")
+    val desiredTracking = actions.filter(col("value_fp").isNotNull)
+      .select("item_key", "row_key", "value_fp")
     val trackingCommit: StateStore.TableCommit =
       if (planned.destructive) StateStore.Full(desiredTracking)
       else StateStore.Delta(desiredTracking, deleteKeys)
@@ -911,7 +921,7 @@ final class Flow(
       else {
         val prevErrors = st.read("errors", ErrorsSchema)
         val tombstones = prevErrors
-          .join(scopeKeys, Seq("item_key"), "left_semi")
+          .join(scope.scopeKeys, Seq("item_key"), "left_semi")
           .select("item_key", "row_key")
         // no new failures AND no stale scope failures to clear ⇒ skip
         // the family entirely — a zero-row Delta segment per run is
@@ -922,8 +932,7 @@ final class Flow(
           val newFailed =
             if (hasErrors) failed
             else spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              ErrorsSchema)
+              spark.sparkContext.emptyRDD[Row], ErrorsSchema)
           Map("errors" -> StateStore.Delta(newFailed, tombstones))
         }
       }
@@ -940,17 +949,12 @@ final class Flow(
         .map { case (n, df) => n -> StateStore.Full(df) } ++
       userStateFn.map { fn =>
       val prev = st.read("user_state", UserStateSchema)
-      val prevChanged = scopeLists match {
-        case Some((changedL, _)) =>
-          prev.filter(col("item_key").isin(changedL: _*))
-        case None => prev.join(changedKeys, Seq("item_key"), "left_semi")
-      }
-      val declared = fn(input, prevChanged)
+      val declared = fn(input, scope.changedOnly(prev))
         .select(col("item_key"), col("state_key"), col("value").cast("string"))
       // unchanged components keep state; changed components' state is
       // exactly what they redeclared; gone components' state is pruned
       "user_state" -> (StateStore.Delta(declared,
-        prev.join(scopeKeys, Seq("item_key"), "left_semi")
+        prev.join(scope.scopeKeys, Seq("item_key"), "left_semi")
           .select("item_key", "state_key")): StateStore.TableCommit)
     }
     // the memo row count advances by exactly (new items − gone items):
@@ -972,7 +976,7 @@ final class Flow(
       rowsDeleted = byAction("delete"),
       rowsNoop = byAction("noop"),
       rowsFailed = nFailed)
-    Seq(listing, probe, level2, changedKeys, loaded, desired, actions, failed)
+    (Seq(listing, probe, loaded, actions, failed) ++ scope.cached)
       .foreach(_.unpersist())
     stats
   }
@@ -1159,8 +1163,12 @@ final class Flow(
 }
 
 object Flow {
-  /** Scope-size bound for the reconcile's pruned tracking read (see
-    * `scopeList` in runImpl): under it, scope keys become an IN plan
-    * the parquet scans prune by; past it the legacy semi-join wins. */
+  /** Scope-size bound for bounded-scope literalization (see runImpl):
+    * a pass whose changed + suspect + gone items fit it collects its
+    * scope once and runs level 2, the keyed restrictions and the memo
+    * commit from driver lists — scope keys become IN plans the parquet
+    * scans prune by. Past it the scope stays a frame (semi-joins):
+    * these literals become per-pass IN plans, and past a few thousand
+    * the optimizer pass costs more than the pruning saves. */
   val MaxScopeLiterals = 4096
 }

@@ -224,8 +224,9 @@ final class LiveMap(val name: String = "livemap") extends Target {
     // the +1 sentinel is what makes the truncation detectable.
     val up = upserts.limit(LiveMap.MaxEntries + 1).collect()
     require(up.length <= LiveMap.MaxEntries,
-      s"LiveMap '$name': batch of more than ${LiveMap.MaxEntries} rows " +
-        "exceeds the entry cap — use a ParquetTableTarget chain for " +
+      s"LiveMap '$name': batch of ≥ ${LiveMap.MaxEntries + 1} rows (the " +
+        "bounded read stops there) exceeds the entry cap of " +
+        s"${LiveMap.MaxEntries} — use a ParquetTableTarget chain for " +
         "unbounded hand-off")
     val keyIdx = upserts.columns.indexOf("row_key")
     // cap on the RESULTING size: re-upserting present keys updates in

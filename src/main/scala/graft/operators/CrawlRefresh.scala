@@ -759,14 +759,21 @@ object CrawlRefresh {
         // tally inside the same ≤3-row aggregate — a snapshot that
         // carries duplicate ids would silently skew the persisted
         // n_total/screenedOut where the old standalone counts measured
-        // the materialized frames; now it fails loudly instead.
+        // the materialized frames; now it fails loudly instead. A null
+        // id is its own failure: countDistinct skips nulls, so without
+        // the non-null tally it would report as a duplicate.
         val byStatusRows = delta.groupBy("status")
-          .agg(count(lit(1)).as("n"),
+          .agg(count(lit(1)).as("n"), count(col("id")).as("n_nonnull"),
             countDistinct(col("id")).as("n_ids")).collect()
         byStatusRows.foreach { r =>
           require(r.getLong(1) == r.getLong(2),
+            s"null ids in snapshot diff: status=${r.getString(0)} has " +
+              s"${r.getLong(1) - r.getLong(2)} of ${r.getLong(1)} rows " +
+              "with a null id — the nightly's id-keyed stores and " +
+              "derived counts require a non-null id on every row")
+          require(r.getLong(2) == r.getLong(3),
             s"duplicate ids in snapshot diff: status=${r.getString(0)} " +
-              s"has ${r.getLong(1)} rows over ${r.getLong(2)} distinct " +
+              s"has ${r.getLong(2)} rows over ${r.getLong(3)} distinct " +
               "ids — the nightly's id-keyed stores and derived counts " +
               "require unique ids per snapshot side")
         }

@@ -710,4 +710,37 @@ class CrawlRefreshSpec extends SparkSpec {
     }
     assert(e3.getMessage.contains("container identity"), e3.getMessage)
   }
+
+  test("a null snapshot id fails as null ids, not as a duplicate") {
+    import spark.implicits._
+    val work = java.nio.file.Files.createTempDirectory("graft-crawl-nullid")
+    work.toFile.deleteOnExit()
+    val wd = work.resolve("state").toString
+    val snapA = (1 to 5).map(i => doc(i, words(i))).toDF("doc_id", "text")
+    assert(CrawlRefresh.nightly(spark, wd, snapA).keptSize === 5)
+
+    // one row without an id: the diff classifies it "added" with a
+    // null id, which countDistinct alone would misreport as a duplicate
+    val nullRow = spark.range(1).select(lit(null).cast("long").as("doc_id"),
+      lit(words(99)).as("text"))
+    val e1 = intercept[IllegalArgumentException] {
+      CrawlRefresh.nightly(spark, wd, snapA.unionByName(nullRow))
+    }
+    assert(e1.getMessage.contains("null ids") &&
+      !e1.getMessage.contains("duplicate"), e1.getMessage)
+
+    // a real duplicate still reports as one
+    val dup = Seq(doc(100, words(100)), doc(100, words(101)))
+      .toDF("doc_id", "text")
+    val e2 = intercept[IllegalArgumentException] {
+      CrawlRefresh.nightly(spark, wd, snapA.unionByName(dup))
+    }
+    assert(e2.getMessage.contains("duplicate ids"), e2.getMessage)
+
+    // both checks fail before the night's first mutation: a clean
+    // snapshot still runs as an ordinary night afterwards
+    val night = CrawlRefresh.nightly(spark, wd, snapA)
+    assert(!night.bootstrap && night.sliceSize === 0 &&
+      night.keptSize === 5, night)
+  }
 }

@@ -59,6 +59,105 @@ class LiveSpec extends SparkSpec {
     assert(op.flush().isNoop && op.pendingSubpaths.isEmpty)
   }
 
+  test("a flush resolves level 2 on the driver: touch, edit, add, delete, vanish") {
+    val (src, tgt, st) = (tmpDir("l2-src"), tmpDir("l2-tgt"), tmpDir("l2-st"))
+    Seq("a", "b", "c", "d", "v").foreach(k => write(src, s"$k.md", s"$k content"))
+    val fs = LocalFsSource(src.toString, Seq("**.md"))
+    // v.md vanishes right after the delta re-stat has seen it, before
+    // the content load — a churning directory's stat→read race
+    val vanish = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val source = new Source {
+      def list(spark: org.apache.spark.sql.SparkSession) = fs.list(spark)
+      override def listKeys(spark: org.apache.spark.sql.SparkSession,
+          keys: Seq[String]) = {
+        val restat = fs.listKeys(spark, keys) // stats eagerly
+        if (vanish.getAndSet(false)) Files.delete(src.resolve("v.md"))
+        restat
+      }
+      def load(spark: org.apache.spark.sql.SparkSession,
+          keys: org.apache.spark.sql.DataFrame) = fs.load(spark, keys)
+      def contentFpOf = fs.contentFpOf
+    }
+    val flow = new Flow("l2", source, Seq(upperStage),
+      ParquetTableTarget(tgt.toString, 2), st.toString,
+      rowKeyOwnedByItem = true)
+    val op = flow.operator(spark)
+    assert(op.updateFull().recomputed == 5)
+    def memoRow(k: String) = flow.componentMemo(spark)
+      .filter(col("item_key") === k).collect().toSeq match {
+        case Seq(r) => r
+        case rs => fail(s"expected one memo row for $k, got $rs")
+      }
+    val storedFpA = memoRow("a.md").getAs[String]("content_fp")
+
+    def bump(rel: String): Unit = {
+      val f = src.resolve(rel).toFile
+      assert(f.setLastModified(f.lastModified + 10000))
+    }
+    bump("a.md")                                   // touched only: refreshed
+    write(src, "b.md", "b content, edited"); bump("b.md") // suspect → changed
+    write(src, "e.md", "e content")                // added
+    Files.delete(src.resolve("c.md"))              // deleted
+    bump("v.md")                                   // suspect, then vanishes
+    op.update("a.md", "b.md", "e.md", "v.md"); op.delete("c.md")
+    vanish.set(true)
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    val r =
+      try {
+        val out = op.flush()
+        Thread.sleep(300) // listener events drain asynchronously
+        out
+      } finally spark.sparkContext.removeSparkListener(counter)
+    assert(r == RunStats(components = 5, unchanged = 1, refreshed = 1,
+      recomputed = 3, deletedComponents = 1, rowsInserted = 1,
+      rowsUpdated = 1, rowsDeleted = 2, rowsNoop = 0), s"$r")
+
+    // target == Transform(files on disk)
+    def transformOfFiles = Option(src.toFile.listFiles()).toSeq.flatten
+      .map(f => (f.getName + "#0", new String(Files.readAllBytes(f.toPath),
+        StandardCharsets.UTF_8).toUpperCase)).toSet
+    def targetRows = flow.target.read(spark).select("row_key", "text")
+      .collect().map(t => (t.getString(0), t.getString(1))).toSet
+    assert(targetRows == transformOfFiles)
+
+    // the refreshed memo row: the new memo state, the stored content fp
+    val fa = src.resolve("a.md").toFile
+    val a = memoRow("a.md")
+    assert(a.getAs[String]("memo_state") == s"${fa.length}:${fa.lastModified}")
+    assert(a.getAs[String]("content_fp") == storedFpA)
+    // the vanished suspect recomputed from no content: no fp recorded
+    assert(memoRow("v.md").getAs[String]("content_fp") == null)
+
+    // the flush's cost is pinned structurally: with level 2 resolved on
+    // the driver it measured 32 jobs (bound: +8 margin); the frame-based
+    // level 2 (a join + count, a scope re-collect, the source's
+    // bounded-key collect, per-semi-join broadcast builds) ran 50
+    info(s"mixed flush launched ${jobs.get} Spark jobs")
+    assert(jobs.get <= 40,
+      s"mixed flush launched ${jobs.get} Spark jobs — the literal-scope " +
+        "pass grew beyond its fixed structure")
+
+    // the refreshed row settles: flushing it again is a pure no-op
+    val store = new StateStore(spark, st.toString)
+    val v0 = store.currentVersion
+    op.update("a.md")
+    assert(op.flush().isNoop)
+    assert(store.currentVersion == v0, "a no-op flush must not commit")
+    // the vanished item GCs on its next flush; then the corpus is quiet
+    op.delete("v.md")
+    val gc = op.flush()
+    assert(gc.deletedComponents == 1 && gc.rowsDeleted == 0, s"$gc")
+    assert(flow.run(spark).isNoop)
+    assert(targetRows == transformOfFiles)
+  }
+
   test("stats handle: cumulative counters, watch subscription, ready transition") {
     val (src, tgt, st) = (tmpDir("uh-src"), tmpDir("uh-tgt"), tmpDir("uh-st"))
     write(src, "a.md", "alpha")

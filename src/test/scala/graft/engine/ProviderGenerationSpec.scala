@@ -46,11 +46,12 @@ class ProviderGenerationSpec extends SparkSpec {
         .cast(castTo).as("value")))
 
   private def mkFlow(src: Path, tgt: Path, st: Path, buckets: Int = 4,
-      castTo: String = "int", target: Target = null): Flow = {
+      castTo: String = "int", target: Target = null,
+      managedBy: StateDiff.ManagedBy = StateDiff.SystemManaged): Flow = {
     val t = Option(target).getOrElse(
       ParquetTableTarget(tgt.toString, numBuckets = buckets))
     new Flow("gen", LocalFsSource(src.toString, Seq("**.md")),
-      Seq(stage(castTo)), t, st.toString)
+      Seq(stage(castTo)), t, st.toString, managedBy = managedBy)
   }
 
   private def targetState(st: Path): (String, Long, Long) = {
@@ -287,5 +288,39 @@ class ProviderGenerationSpec extends SparkSpec {
     val r2 = flow.run(spark)
     assert(r2.isNoop,
       s"a legacy-encoded record must decode to the same plan: $r2")
+  }
+
+  test("a managedBy flip on an identical schema persists, then runs as a no-op") {
+    val (src, tgt, st) = (tmpDir("mb-src"), tmpDir("mb-tgt"), tmpDir("mb-st"))
+    seed(src)
+    assert(mkFlow(src, tgt, st).run(spark).rowsInserted == 3)
+    def stored() = {
+      val rows = new StateStore(spark, st.toString)
+        .read("target_state", StateStore.TargetStateSchema).collect()
+      assert(rows.length == 1, s"expected one target_state row, got ${rows.length}")
+      rows.head
+    }
+    val before = stored()
+    assert(before.getString(2) == StateDiff.SystemManaged.name)
+
+    // same stages, same schema record: only the ownership tag differs,
+    // and that alone must make the transition pending and persist it
+    val userFlow = mkFlow(src, tgt, st, managedBy = StateDiff.UserManaged)
+    val r1 = userFlow.run(spark)
+    assert(r1.isNoop && r1.unchanged == 3, s"$r1")
+    val flipped = stored()
+    assert(flipped.getString(2) == StateDiff.UserManaged.name,
+      "the flipped managedBy must be persisted")
+    assert((0 to 5).filter(_ != 2).forall(i => flipped.get(i) == before.get(i)),
+      s"only managed_by may change: $before -> $flipped")
+
+    // once persisted the plan is settled: the next run commits nothing,
+    // so target_state is not rewritten
+    val store = new StateStore(spark, st.toString)
+    val vBefore = store.currentVersion
+    val r2 = userFlow.run(spark)
+    assert(r2.isNoop && r2.unchanged == 3, s"$r2")
+    assert(store.currentVersion == vBefore,
+      "a settled managedBy must not rewrite target_state")
   }
 }
